@@ -74,7 +74,8 @@ def enforce_schema(df: DataFrame, timeframe: str | None = None,
 
     Semantics of ref src/datalake/read/schemas.py:25-47:
     ts -> UTC timestamp; numerics -> double (missing => 0.0); textual -> string
-    with defaults; reorder to CANONICAL_ORDER keeping extras at the end.
+    with defaults (a column in DEFAULTS is defaulted when absent OR null);
+    reorder to CANONICAL_ORDER keeping extras at the end.
     """
     cols = set(df.columns)
     exprs = []
@@ -90,6 +91,12 @@ def enforce_schema(df: DataFrame, timeframe: str | None = None,
                 exprs.append(F.lit(str(timeframe)).alias(c))
             elif symbol is not None and c == "symbol":
                 exprs.append(F.lit(str(symbol)).alias(c))
+            elif c in cols and c in DEFAULTS:
+                # a present-but-null value (e.g. a landing file read with
+                # CANDLE_SCHEMA that lacks the column) defaults like an
+                # absent one, so no row lands under a null partition value
+                exprs.append(F.coalesce(F.col(c).cast("string"),
+                                        F.lit(DEFAULTS[c])).alias(c))
             elif c in cols:
                 exprs.append(F.col(c).cast("string").alias(c))
             else:

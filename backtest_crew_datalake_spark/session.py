@@ -5,10 +5,12 @@ The session timezone is pinned to UTC — the reference's global contract is
 ``ts_semantics``), and every localization in the engine is explicit
 (``from_utc_timestamp`` / ``to_utc_timestamp``).
 
-Scale posture (100 TB / 1000 executors): AQE on (runtime coalesce + skew-join
-splitting), shuffle partitions sized from the env for local runs but expected to
-be overridden by the cluster conf; dynamic partition overwrite so upserts never
-rewrite unrelated partitions.
+Scale posture (100 TB / 1000 executors): AQE, its partition coalescing and
+skew-join splitting are left at Spark's defaults (all on), so the cluster's
+own conf governs them (docs/scale.md rule 9); shuffle partitions are sized
+from the env for local runs but expected to be overridden by the cluster
+conf; dynamic partition overwrite so upserts never rewrite unrelated
+partitions.
 """
 
 from __future__ import annotations
@@ -32,24 +34,6 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # guide §2.2 — AQE partition coalescing posture. r11 flipped
-        # parallelismFirst to false (size-based coalescing to the 64 MB
-        # advisory); r12 adjudicated the two regressions that flip caused
-        # (verdict #2) and REVERTED to Spark's upstream default TRUE: on
-        # the r12 tree `false` serializes every small shrinking stage
-        # (q_evt_rollup_cascade's minute tier — 80 k rows — coalesced to
-        # ONE task) and lost the full bench both A/B orders (38.3/39.1 s
-        # vs 36.4/37.6 s, geomean 0.95, ratio 1.44 vs 1.27; the r11
-        # same-box win did not reproduce). For genuinely large stages the
-        # advisory governs under either setting, so the 100 TB posture is
-        # unchanged; clusters tune via the env seam.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_BYTES", "67108864"))
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Scan-split sizing. Spark's 128 MB default is tuned for many-file
         # cluster lakes; the local testdata layout is ONE file per table, so
         # a 100 MB fact table would scan as a single task and serialize the
@@ -60,11 +44,6 @@ def get_spark(
         # cluster deployments should override back up via the env.
         .config("spark.sql.files.maxPartitionBytes",
                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8388608"))
-        # Join strategy (guide §3.1): sort-merge is Spark's safe default;
-        # shuffled-hash skips both sorts when a per-partition build side
-        # fits. Parameterized for A/B and cluster override.
-        .config("spark.sql.join.preferSortMergeJoin",
-                os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.compression.codec", "zstd")

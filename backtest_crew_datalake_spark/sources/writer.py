@@ -11,7 +11,8 @@ the output (spark.sql.sources.partitionOverwriteMode=dynamic, set by
 session.py). Only partitions the new data touches are ever read or written —
 an incremental day-ingest reads ~1 month-partition per symbol, not the lake.
 With Delta available this maps 1:1 to MERGE INTO; plain parquet keeps the repo
-dependency-free.
+dependency-free. Writers of one dataset serialize on a kernel ``flock``
+(``_dataset_lock``) held across each read-modify-write.
 
 Fixes-by-construction (documented in SURVEY §7.4): the reference routes a
 whole frame to the FIRST row's (year, month) file (writer.py:142-143) — Spark's
@@ -21,11 +22,10 @@ reference's month-routing hazard.
 
 from __future__ import annotations
 
+import fcntl
 import os
-import re
-import threading
 import time
-from contextlib import contextmanager, nullcontext
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,249 +42,45 @@ _PART_COLS = ["source", "market", "timeframe", "symbol", "year", "month"]
 # collects its partition list to the driver.
 _PRED_LIMIT = 512
 
-# A lock older than this is presumed orphaned by a dead writer and stolen.
-# Live holders renew their locks every lease/3 (heartbeat thread in
-# _partition_locks), so lock age only approaches the lease when the holding
-# process is dead or wholly stalled — a write may run arbitrarily longer
-# than the lease without being stolen mid-write.
-_LOCK_LEASE_MS = 15 * 60 * 1000
-
-# Shared-mode acquisition retries when an exclusive writer keeps slipping in
-# between the sentinel check and per-partition lock acquisition. Each retry
-# waits out the sentinel again; exhausting this means exclusive writers are
-# arriving continuously for ~_SHARED_RETRIES full timeout windows.
-_SHARED_RETRIES = 16
-
-# Test seam: invoked between the staleness stat and the steal rename in
-# _try_steal, so tests can deterministically interleave a competing writer
-# into that window. Always None in production.
-_STEAL_STAT_HOOK = None
+# Seconds a writer waits for its dataset lock before PartitionLockTimeout.
+_LOCK_TIMEOUT_S = 120.0
 
 
 class PartitionLockTimeout(RuntimeError):
-    """Another writer held a partition lock past the acquire timeout."""
-
-
-def _lock_name(vals) -> str:
-    return "__".join(re.sub(r"[^A-Za-z0-9._-]", "-", str(v)) for v in vals)
-
-
-_DATASET_LOCK = "__dataset"
-
-
-def _try_steal(fs, jpath, p, lease_ms: int) -> bool:
-    """Remove ``p`` iff it is older than the lease. Returns True when the
-    lock is (now) gone and a create may be retried immediately.
-
-    The steal is rename-then-verify-then-delete: rename the stale lock to a
-    unique tombstone name, RE-STAT the tombstone, and only delete it if it
-    is still stale. Rename is atomic on HDFS/local FS, so of two concurrent
-    stealers exactly one rename succeeds. The re-stat closes the remaining
-    race: stealer A can steal AND re-create the lock between B's staleness
-    stat and B's rename, so B's rename succeeds — against A's FRESH lock.
-    B sees a fresh tombstone, renames it back into place, and reports
-    failure instead of deleting a live lock. (The heartbeat keeps every
-    live lock's age under lease/3, so tombstone freshness is a reliable
-    live-lock signal.) A sub-millisecond window remains if the rename-back
-    itself loses a race to yet another creator; filesystems without atomic
-    create/rename (plain S3) need a real lock service — see
-    _partition_locks docstring.
-    """
-    try:
-        age_ms = int(time.time() * 1000) - fs.getFileStatus(
-            p).getModificationTime()
-    except Exception:
-        return True  # holder released between probe and stat — retry create
-    if age_ms <= lease_ms:
-        return False
-    if _STEAL_STAT_HOOK is not None:
-        _STEAL_STAT_HOOK()
-    tomb = jpath(f"{p}.steal.{os.getpid()}.{time.monotonic_ns()}")
-    try:
-        if fs.rename(p, tomb):
-            try:
-                tomb_age = int(time.time() * 1000) - fs.getFileStatus(
-                    tomb).getModificationTime()
-            except Exception:
-                return False
-            if tomb_age <= lease_ms:
-                # We renamed a LIVE lock (re-created by a faster stealer
-                # after our staleness stat): put it back and report failure.
-                if not fs.rename(tomb, p):
-                    # p was re-created again in the window; the tombstone is
-                    # an orphaned copy of a superseded lock — drop it.
-                    fs.delete(tomb, False)
-                return False
-            fs.delete(tomb, False)
-            return True
-    except Exception:
-        pass
-    return False  # another writer stole (or refreshed) it first
-
-
-def _create_excl(fs, p) -> bool:
-    """Atomic create-if-absent of an empty lock file.
-
-    Hadoop's ``FileSystem#createNewFile`` is exists()-then-create() — on the
-    LOCAL filesystem neither step excludes a concurrent creator, so two
-    writers racing the same lock can BOTH "create" it (observed on
-    local[32]: both proceed, dynamic overwrites interleave, and the dataset
-    is corrupted with nested partition dirs). For ``file:`` paths use POSIX
-    ``O_CREAT|O_EXCL`` — the kernel arbitrates, exactly one creator wins.
-    On HDFS-like stores createNewFile IS atomic (namenode-enforced), so the
-    Hadoop call is used there.
-    """
-    uri = p.toUri()
-    if uri.getScheme() in (None, "file"):
-        try:
-            os.close(os.open(uri.getPath(),
-                             os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-            return True
-        except FileExistsError:
-            return False
-    return fs.createNewFile(p)
-
-
-def _acquire(fs, jpath, p, deadline: float, lease_ms: int) -> None:
-    # Deadline is checked on EVERY iteration — including after a stat/steal
-    # failure — so a persistently failing filesystem raises instead of
-    # looping forever.
-    while not _create_excl(fs, p):
-        if time.monotonic() > deadline:
-            raise PartitionLockTimeout(f"timed out waiting for {p}")
-        time.sleep(0.01 if _try_steal(fs, jpath, p, lease_ms) else 0.1)
-
-
-def _wait_absent(fs, jpath, p, deadline: float, lease_ms: int) -> None:
-    while fs.exists(p):
-        if time.monotonic() > deadline:
-            raise PartitionLockTimeout(f"timed out waiting for {p} release")
-        if not _try_steal(fs, jpath, p, lease_ms):
-            time.sleep(0.1)
+    """Another writer held the dataset lock past the acquire timeout."""
 
 
 @contextmanager
-def _partition_locks(spark: SparkSession, lock_dir: str,
-                     names: list[str], timeout_s: float = 120.0,
-                     lease_ms: int = _LOCK_LEASE_MS,
-                     exclusive: bool = False):
-    """Serialize concurrent upserts that touch the same partitions.
+def _dataset_lock(lake_root: str, dataset: str):
+    """Hold an exclusive ``flock`` on ``<lake_root>/.locks/<dataset>.lock``
+    across one writer's read-modify-write of ``<lake_root>/<dataset>``.
 
-    One lock file per touched partition under ``lock_dir`` (kept OUTSIDE
-    the dataset directory — e.g. ``<lake_root>/.locks/<dataset>`` — so
-    creating it never makes an empty lake look non-empty), created with
-    the Hadoop FileSystem's atomic ``createNewFile``. Locks are acquired in
-    sorted order (no deadlock between writers with overlapping sets), polled
-    until ``timeout_s``, and stolen when older than ``lease_ms`` (orphaned by
-    a crashed writer — steal is rename-then-delete, atomic, see _try_steal).
-
-    Two compatible lock modes share one directory (a wide backfill that
-    cannot enumerate its partitions must still serialize against narrow
-    upserts into partitions it may touch):
-
-    - shared (default): wait for the ``__dataset`` sentinel to be absent,
-      acquire the per-partition locks, then RE-CHECK the sentinel — if an
-      exclusive writer slipped in mid-acquisition, release everything and
-      retry. Once the re-check passes, either the exclusive writer arrived
-      after our locks existed (it now waits for them) or not at all.
-    - exclusive: acquire the ``__dataset`` sentinel, then wait until no
-      per-partition lock remains (shared writers that pre-dated the
-      sentinel drain; new ones block on the sentinel).
-
-    ``timeout_s`` is PER PHASE — each sentinel wait, each per-partition
-    lock acquisition, and the exclusive drain gets its own ``timeout_s``
-    budget (the pre-sentinel per-lock semantics) — so a contended writer
-    touching hundreds of partitions is not starved by a single shared
-    deadline. One shared-mode attempt is O(timeout_s × (n_locks + 1))
-    (sentinel wait + per-lock acquisitions), and the sentinel re-check
-    can force up to ``_SHARED_RETRIES`` full attempts, so the shared
-    path's worst-case wall time is
-    O(_SHARED_RETRIES × timeout_s × (n_locks + 1)); the exclusive path
-    is O(timeout_s × 2) (sentinel + drain).
-
-    While locks are held (including during acquisition of later locks and
-    the exclusive drain), a daemon heartbeat thread refreshes their mtime
-    every ``lease_ms/3``, so a write that runs longer than the lease is
-    never stolen mid-write; only locks of dead/stalled processes age past
-    the lease.
-
-    Atomicity note: create-exclusive/rename are atomic on HDFS and local
-    FS; plain S3 has neither — there, front this with a real lock service
-    or a table format (Delta/Iceberg) instead.
+    The kernel arbitrates: each ``open()`` is its own lock owner, so threads
+    of one process serialize exactly like separate processes, and a holder
+    that dies (even by SIGKILL) releases the lock when its descriptor
+    closes, with no lease to expire. The lock file lives outside the dataset
+    directory, so creating it never makes an empty lake look non-empty.
+    Like compact_partitions, this needs a local POSIX filesystem
+    (docs/partitioning.md).
     """
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path
-    fs = jpath(lock_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(jpath(lock_dir))
-    sentinel = jpath(f"{lock_dir}/{_DATASET_LOCK}.lock")
-    held = []
-    stop = threading.Event()
-
-    def _phase_deadline() -> float:
-        return time.monotonic() + timeout_s
-
-    def _heartbeat():
-        # Lease renewal: bump mtime of every held lock each lease/3 so
-        # _try_steal (age > lease) never fires on a live holder, however
-        # long the write runs. Errors are ignored: a vanished lock means it
-        # was released or (pathologically) stolen — nothing to refresh.
-        while not stop.wait(lease_ms / 3000.0):
-            now_ms = int(time.time() * 1000)
-            for q in list(held):
-                try:
-                    fs.setTimes(q, now_ms, -1)
-                except Exception:
-                    pass
-
-    hb = threading.Thread(target=_heartbeat, name="sparklake-lock-heartbeat",
-                          daemon=True)
-    hb.start()
+    lock_dir = os.path.join(lake_root, ".locks")
+    os.makedirs(lock_dir, exist_ok=True)
+    path = os.path.join(lock_dir, f"{dataset}.lock")
+    fd = os.open(path, os.O_RDWR | os.O_CREAT, 0o644)
     try:
-        if exclusive:
-            _acquire(fs, jpath, sentinel, _phase_deadline(), lease_ms)
-            held.append(sentinel)
-            drain_deadline = _phase_deadline()
-            while True:  # drain pre-existing shared writers
-                others = [
-                    st.getPath() for st in fs.listStatus(jpath(lock_dir))
-                    if st.getPath().getName().endswith(".lock")
-                    and st.getPath().getName() != sentinel.getName()
-                ]
-                if not others:
-                    break
-                if time.monotonic() > drain_deadline:
+        deadline = time.monotonic() + _LOCK_TIMEOUT_S
+        while True:
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except BlockingIOError:
+                if time.monotonic() > deadline:
                     raise PartitionLockTimeout(
-                        f"timed out draining {len(others)} partition locks")
-                if not any(_try_steal(fs, jpath, q, lease_ms)
-                           for q in others):
-                    time.sleep(0.1)
-        else:
-            want = [jpath(f"{lock_dir}/{n}.lock") for n in sorted(set(names))]
-            for _attempt in range(_SHARED_RETRIES):
-                _wait_absent(fs, jpath, sentinel, _phase_deadline(), lease_ms)
-                for p in want:
-                    _acquire(fs, jpath, p, _phase_deadline(), lease_ms)
-                    held.append(p)
-                if not fs.exists(sentinel):
-                    break
-                # exclusive writer arrived mid-acquisition: back off, retry
-                for p in held:
-                    fs.delete(p, False)
-                held.clear()
-                time.sleep(0.1)
-            else:
-                raise PartitionLockTimeout(
-                    f"exclusive writers kept arriving for {_SHARED_RETRIES} "
-                    "acquisition attempts")
+                        f"timed out waiting for {path}") from None
+                time.sleep(0.05)
         yield
     finally:
-        stop.set()
-        hb.join(timeout=2.0)
-        for p in held:
-            try:
-                fs.delete(p, False)
-            except Exception:
-                pass  # best-effort release; lease expiry reclaims strays
+        os.close(fd)  # closing the descriptor releases the lock
 
 
 def _dataset_exists(spark: SparkSession, path: str) -> bool:
@@ -315,15 +111,12 @@ def upsert_candles(
     lake_root: str,
     dataset: str = "data",
     key: list[str] | None = None,
-    lock: bool = True,
 ) -> None:
     """Merge-upsert candle rows into <lake_root>/<dataset>, dedupe keep-last on
     the primary key (source, symbol, timeframe, ts) with NEW rows winning
     (ref writer.py:193-199 keep='last' after concat([existing, new])).
 
     Idempotent: re-writing the same rows is a no-op (ref README.md:176).
-    Concurrent writers touching the same partitions serialize on per-partition
-    lock files (``lock=False`` opts out for single-writer pipelines).
     """
     key = key or PRIMARY_KEY
     new = _with_partitions(enforce_schema(df_new)).withColumn(_PRIO, F.lit(1))
@@ -337,21 +130,8 @@ def upsert_candles(
     touched_df = new.select(*_PART_COLS).distinct()
     touched = touched_df.limit(_PRED_LIMIT + 1).collect()
     overflow = len(touched) > _PRED_LIMIT
-    # A writer that can't (or needn't) enumerate its partitions takes the
-    # dataset sentinel EXCLUSIVELY; narrow writers take per-partition locks
-    # that the sentinel protocol serializes against (see _partition_locks).
-    exclusive = overflow or not touched
-    lock_names = (
-        [] if exclusive
-        else [_lock_name(tuple(r[c] for c in _PART_COLS)) for r in touched]
-    )
 
-    guard = (
-        _partition_locks(spark, f"{lake_root}/.locks/{dataset}", lock_names,
-                         exclusive=exclusive)
-        if lock else nullcontext()
-    )
-    with guard:
+    with _dataset_lock(lake_root, dataset):
         if _dataset_exists(spark, path):
             existing = spark.read.option("basePath", path).parquet(path)
             if overflow:
@@ -397,25 +177,26 @@ def write_levels(
     partitioned by symbol/year (ref or_levels.py:67-83, key at line 76)."""
     path = f"{lake_root}/levels"
     new = df.withColumn("year", F.year("session_date")).withColumn(_PRIO, F.lit(1))
-    if _dataset_exists(spark, path):
-        existing = (
-            spark.read.option("basePath", path).parquet(path)
-            .withColumn(_PRIO, F.lit(0))
+    with _dataset_lock(lake_root, "levels"):
+        if _dataset_exists(spark, path):
+            existing = (
+                spark.read.option("basePath", path).parquet(path)
+                .withColumn(_PRIO, F.lit(0))
+            )
+            merged = existing.unionByName(new, allowMissingColumns=True)
+        else:
+            merged = new
+        out = dedupe_keep(merged, key=["session_date", "symbol"],
+                          order=[_PRIO], keep="last").drop(_PRIO)
+        (
+            out.repartition("symbol", "year")
+            .sortWithinPartitions("session_date")
+            .write.mode("overwrite")
+            # per-write dynamic overwrite — see upsert_candles
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("symbol", "year")
+            .parquet(path)
         )
-        merged = existing.unionByName(new, allowMissingColumns=True)
-    else:
-        merged = new
-    out = dedupe_keep(merged, key=["session_date", "symbol"],
-                      order=[_PRIO], keep="last").drop(_PRIO)
-    (
-        out.repartition("symbol", "year")
-        .sortWithinPartitions("session_date")
-        .write.mode("overwrite")
-        # per-write dynamic overwrite — see upsert_candles
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("symbol", "year")
-        .parquet(path)
-    )
 
 
 def compact_partitions(
@@ -433,13 +214,11 @@ def compact_partitions(
     small ingests leave each partition with one small file per run, and at
     100 TB a million tiny files costs more in listing+open than the scan).
 
-    OFFLINE, LOCAL-FILESYSTEM maintenance pass: it walks/renames via the
-    driver's os module (os.walk/os.rename), so it requires a posix-rename
-    filesystem and NO concurrent readers or writers on the dataset (the
-    two-rename swap has a window where a reader sees the leaf absent and
-    returns zero rows for that partition). Run it from a scheduled
-    maintenance job that owns the lake exclusively; for object-store lakes
-    use a table format's OPTIMIZE instead.
+    LOCAL-FILESYSTEM maintenance pass: it walks/renames via the driver's os
+    module (os.walk/os.rename). Run it while no reader scans the dataset:
+    the two-rename swap has a window where a reader sees the leaf absent
+    and returns zero rows for that partition. For object-store lakes use a
+    table format's OPTIMIZE instead.
 
     Per leaf dir: if it holds more parquet files than ceil(bytes/target),
     rewrite to that many files — sorted by ``sort_col`` when the column
@@ -469,66 +248,69 @@ def compact_partitions(
         return (os.path.join(parent, f".__compact_tmp_{base}"),
                 os.path.join(parent, f".__compact_bak_{base}"))
 
-    # recovery pass: restore leaves lost to a crash between the two renames,
-    # and clear stale tmps — before the (pre-materialized) compaction walk
-    for dirpath, subdirs, _files in list(os.walk(root)):
-        for sub in list(subdirs):
-            full = os.path.join(dirpath, sub)
-            if sub.startswith(".__compact_tmp_"):
-                shutil.rmtree(full, ignore_errors=True)
-            elif sub.startswith(".__compact_bak_"):
-                orig = os.path.join(dirpath,
-                                    sub[len(".__compact_bak_"):])
-                if os.path.exists(orig):
-                    shutil.rmtree(full)          # swap completed; drop bak
-                else:
-                    os.rename(full, orig)        # crashed mid-swap; restore
+    with _dataset_lock(lake_root, dataset):
+        # recovery pass: restore leaves lost to a crash between the two
+        # renames, and clear stale tmps — before the (pre-materialized)
+        # compaction walk
+        for dirpath, subdirs, _files in list(os.walk(root)):
+            for sub in list(subdirs):
+                full = os.path.join(dirpath, sub)
+                if sub.startswith(".__compact_tmp_"):
+                    shutil.rmtree(full, ignore_errors=True)
+                elif sub.startswith(".__compact_bak_"):
+                    orig = os.path.join(dirpath,
+                                        sub[len(".__compact_bak_"):])
+                    if os.path.exists(orig):
+                        shutil.rmtree(full)      # swap completed; drop bak
+                    else:
+                        os.rename(full, orig)    # crashed mid-swap; restore
 
-    # materialize the walk before mutating directories beneath it
-    leaves = [(d, fs) for d, _sub, fs in os.walk(root)]
-    for dirpath, filenames in leaves:
-        parts = [f for f in filenames
-                 if f.endswith(".parquet") and not f.startswith((".", "_"))]
-        if len(parts) <= 1:
-            continue
-        total_bytes = sum(
-            os.path.getsize(os.path.join(dirpath, f)) for f in parts
-        )
-        want = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
-        if len(parts) <= want:
-            continue
-        df = spark.read.parquet(dirpath)
-        n_before = df.count()
-        tmp, bak = _tmp_bak(dirpath)
-        shutil.rmtree(tmp, ignore_errors=True)
-        if (zorder_cols is not None
-                and all(c in df.columns for c in zorder_cols)):
-            from .layout import zorder_key
-
-            w = (
-                df.withColumn("__z", zorder_key(*zorder_cols))
-                .repartitionByRange(want, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
+        # materialize the walk before mutating directories beneath it
+        leaves = [(d, fs) for d, _sub, fs in os.walk(root)]
+        for dirpath, filenames in leaves:
+            parts = [f for f in filenames if f.endswith(".parquet")
+                     and not f.startswith((".", "_"))]
+            if len(parts) <= 1:
+                continue
+            total_bytes = sum(
+                os.path.getsize(os.path.join(dirpath, f)) for f in parts
             )
-        else:
-            w = df.coalesce(want)
-            if sort_col is not None and sort_col in df.columns:
-                w = w.sortWithinPartitions(sort_col)
-        writer = w.write.mode("overwrite")
-        for k, v in (write_options or {}).items():
-            writer = writer.option(k, v)
-        writer.parquet(tmp)
-        n_after = spark.read.parquet(tmp).count()
-        if n_after != n_before:  # never swap in a bad rewrite
+            want = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
+            if len(parts) <= want:
+                continue
+            df = spark.read.parquet(dirpath)
+            n_before = df.count()
+            tmp, bak = _tmp_bak(dirpath)
             shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"compaction row-count mismatch in {dirpath}: "
-                f"{n_before} -> {n_after}"
-            )
-        os.rename(dirpath, bak)
-        os.rename(tmp, dirpath)
-        shutil.rmtree(bak)
-        new_parts = [f for f in os.listdir(dirpath) if f.endswith(".parquet")]
-        out[dirpath] = (len(parts), len(new_parts))
+            if (zorder_cols is not None
+                    and all(c in df.columns for c in zorder_cols)):
+                from .layout import zorder_key
+
+                w = (
+                    df.withColumn("__z", zorder_key(*zorder_cols))
+                    .repartitionByRange(want, "__z")
+                    .sortWithinPartitions("__z")
+                    .drop("__z")
+                )
+            else:
+                w = df.coalesce(want)
+                if sort_col is not None and sort_col in df.columns:
+                    w = w.sortWithinPartitions(sort_col)
+            writer = w.write.mode("overwrite")
+            for k, v in (write_options or {}).items():
+                writer = writer.option(k, v)
+            writer.parquet(tmp)
+            n_after = spark.read.parquet(tmp).count()
+            if n_after != n_before:  # never swap in a bad rewrite
+                shutil.rmtree(tmp, ignore_errors=True)
+                raise RuntimeError(
+                    f"compaction row-count mismatch in {dirpath}: "
+                    f"{n_before} -> {n_after}"
+                )
+            os.rename(dirpath, bak)
+            os.rename(tmp, dirpath)
+            shutil.rmtree(bak)
+            new_parts = [f for f in os.listdir(dirpath)
+                         if f.endswith(".parquet")]
+            out[dirpath] = (len(parts), len(new_parts))
     return out

@@ -92,87 +92,6 @@ def stateful_sessionize(
     )
 
 
-class _SessionProcessor:
-    """StatefulProcessor for transformWithStateInPandas (Spark 4's successor
-    to applyInPandasWithState): same open-session semantics as
-    stateful_sessionize, but state lives in a named ValueState slot managed
-    by the state store (RocksDB-backed in production — state size no longer
-    bounded by executor heap, and the API adds timers/TTL for production
-    session expiry)."""
-
-    def __init__(self, timeout_us: int, ts_col: str):
-        self._timeout_us = timeout_us
-        self._ts_col = ts_col
-
-    def init(self, handle):
-        self._state = handle.getValueState("open_session", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values):
-        (user,) = key
-        if self._state.exists():
-            start_us, last_us, n = self._state.get()
-        else:
-            start_us = last_us = None
-            n = 0
-        closed = []
-        for pdf in rows:
-            ts = pd.to_datetime(pdf[self._ts_col]).sort_values()
-            for t in ts:
-                t_us = t.value // 1000
-                if last_us is None:
-                    start_us, last_us, n = t_us, t_us, 1
-                elif t_us - last_us >= self._timeout_us:
-                    closed.append((user, start_us, last_us, n))
-                    start_us, last_us, n = t_us, t_us, 1
-                else:
-                    last_us = max(last_us, t_us)
-                    n += 1
-        self._state.update((start_us, last_us, n))
-        if closed:
-            yield pd.DataFrame({
-                "user_id": [c[0] for c in closed],
-                "session_start": [pd.Timestamp(c[1], unit="us") for c in closed],
-                "session_end": [pd.Timestamp(c[2], unit="us") for c in closed],
-                "n_events": [c[3] for c in closed],
-            })
-
-    def close(self):
-        pass
-
-
-def tws_sessionize(
-    stream_df: DataFrame,
-    timeout_seconds: int = 1800,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """transformWithStateInPandas sessionization — behaviorally identical to
-    stateful_sessionize (closed sessions emitted, open tail kept in state)
-    on the modern API. Kept side by side so both stateful surfaces are
-    exercised; new code should prefer this one.
-
-    NOTE: executing this operator requires the ``protobuf`` package (the
-    TWS state-server protocol is protobuf-based); in environments without
-    it the query fails at start with STREAMING_PYTHON_RUNNER_INITIALIZATION
-    — the test suite skips it there. applyInPandasWithState
-    (stateful_sessionize) has no such dependency."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # subclass created here so importing this module never requires the
-    # streaming internals at import time
-    proc = type(
-        "SessionProcessor", (_SessionProcessor, StatefulProcessor), {}
-    )(timeout_seconds * 1_000_000, ts_col)
-    # only (user, ts) cross the Arrow boundary (guide §4.1)
-    return stream_df.select(user_col, ts_col).groupBy(
-        user_col).transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=SESSION_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 LEVELS_OUT_SCHEMA = T.StructType([
     T.StructField("session_date", T.DateType(), False),
     T.StructField("tz", T.StringType(), False),

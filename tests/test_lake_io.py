@@ -135,6 +135,18 @@ def test_enforce_schema_defaults(spark):
     assert row["timeframe"] == "M1"
     assert row["ts"] == pd.Timestamp("2024-01-01 00:01:00")
 
+    # present-but-null metadata (a landing file read with CANDLE_SCHEMA that
+    # lacks those columns) defaults too, instead of partitioning as null
+    nulls = spark.createDataFrame(
+        [("2024-01-01 00:01:00", "BTC-USD", None, None, None, None)],
+        "ts string, symbol string, source string, market string, "
+        "timeframe string, exchange string",
+    )
+    row = enforce_schema(nulls).collect()[0]
+    assert (row["source"], row["market"], row["timeframe"],
+            row["exchange"]) == ("ibkr", "crypto", "M1", "PAXOS")
+    assert row["symbol"] == "BTC-USD"
+
 
 def test_column_pruned_read(spark, tmp_path):
     root = str(tmp_path / "lake")
@@ -314,9 +326,23 @@ def test_upsert_dynamic_overwrite_forced_per_write(spark, tmp_path):
     assert months == {1, 2}
 
 
+def _dataset_lock_free(root, dataset="data"):
+    """True when a non-blocking flock on the dataset's lock file succeeds."""
+    import fcntl
+
+    fd = os.open(os.path.join(root, ".locks", f"{dataset}.lock"), os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        return True
+    except BlockingIOError:
+        return False
+    finally:
+        os.close(fd)
+
+
 def test_concurrent_upserts_same_partition_no_lost_rows(spark, tmp_path):
     """Two writers upserting disjoint row sets into the SAME partition
-    serialize on the partition lock; the read-modify-write interleave that
+    serialize on the dataset lock; the read-modify-write interleave that
     would drop the first writer's rows cannot happen."""
     import threading
 
@@ -341,9 +367,7 @@ def test_concurrent_upserts_same_partition_no_lost_rows(spark, tmp_path):
         t.join()
     assert not errs, errs
     assert read_range(spark, root, symbol="BTC-USD").count() == 1440
-    # locks released
-    import glob
-    assert glob.glob(f"{root}/.locks/data/*.lock") == []
+    assert _dataset_lock_free(root)  # lock released
 
 
 def test_read_day_closed_second_contract(spark, tmp_path):
@@ -381,10 +405,10 @@ def test_empty_lake_respects_column_projection(spark, tmp_path):
 
 def test_wide_exclusive_vs_narrow_shared_no_lost_update(
         spark, tmp_path, monkeypatch):
-    """A wide backfill (touched partitions > _PRED_LIMIT -> exclusive
-    dataset sentinel) racing a narrow upsert (shared per-partition locks)
-    must serialize: the narrow writer's partition is one the wide writer
-    also rewrites, so an unserialized interleave loses one side's rows."""
+    """A wide backfill (touched partitions > _PRED_LIMIT -> left-semi join
+    merge) racing a narrow upsert (OR-chain partition predicate) must
+    serialize: the narrow writer's partition is one the wide writer also
+    rewrites, so an unserialized interleave loses one side's rows."""
     import threading
 
     from backtest_crew_datalake_spark.sources import writer
@@ -396,7 +420,7 @@ def test_wide_exclusive_vs_narrow_shared_no_lost_update(
     upsert_candles(
         spark, make_m1(spark, ["BTC-USD"], "2023-12-01", "2023-12-01",
                        seed=11), root)
-    # 3 month-partitions > patched limit of 2 -> exclusive mode
+    # 3 month-partitions > patched limit of 2 -> left-semi join merge
     wide = make_m1(spark, ["BTC-USD"], "2024-01-01", "2024-01-01", seed=11) \
         .unionByName(make_m1(spark, ["BTC-USD"], "2024-02-01", "2024-02-01",
                              seed=11)) \
@@ -422,205 +446,112 @@ def test_wide_exclusive_vs_narrow_shared_no_lost_update(
     assert not errs, errs
     # every row from the seed, the wide backfill, and the narrow upsert
     assert read_range(spark, root, symbol="BTC-USD").count() == 5 * 1440
-    import glob
-    assert glob.glob(f"{root}/.locks/data/*.lock") == []
+    assert _dataset_lock_free(root)  # lock released
 
 
-def _lock_fs(spark, lock_dir):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path
-    fs = jpath(lock_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(jpath(lock_dir))
-    return fs, jpath
-
-
-def test_steal_verifies_tombstone_freshness(spark, tmp_path, monkeypatch):
-    """The ADVICE race: stealer B stats the lock stale; before B's rename,
-    stealer A steals it AND re-creates a fresh lock at the same path. B's
-    rename then succeeds -- against A's LIVE lock. B must detect the fresh
-    tombstone, restore the lock, and report failure, never deleting a live
-    lock."""
-    import time as _t
+def test_killed_lock_holder_releases_lock_at_once(
+        spark, tmp_path, monkeypatch):
+    """A process SIGKILLed while it holds the dataset lock releases it with
+    its descriptor: the next upsert takes the lock on its first try, with
+    no lease to wait out."""
+    import signal
+    import subprocess
+    import sys
 
     from backtest_crew_datalake_spark.sources import writer
 
-    lock_dir = str(tmp_path / "locks")
-    fs, jpath = _lock_fs(spark, lock_dir)
-    p_os = os.path.join(lock_dir, "part.lock")
-    p = jpath(p_os)
+    root = str(tmp_path / "lake")
+    os.makedirs(os.path.join(root, ".locks"))
+    holder = subprocess.Popen(
+        [sys.executable, "-c",
+         "import fcntl, sys, time\n"
+         "f = open(sys.argv[1], 'w')\n"
+         "fcntl.flock(f, fcntl.LOCK_EX)\n"
+         "print('held', flush=True)\n"
+         "time.sleep(600)\n",
+         os.path.join(root, ".locks", "data.lock")],
+        stdout=subprocess.PIPE, text=True)
+    try:
+        assert holder.stdout.readline().strip() == "held"
+        assert not _dataset_lock_free(root)
+    finally:
+        holder.send_signal(signal.SIGKILL)
+        holder.wait()
+        holder.stdout.close()
 
-    open(p_os, "w").close()
-    stale = _t.time() - 3600
-    os.utime(p_os, (stale, stale))
-
-    def faster_stealer_wins():
-        # simulate A: steal the stale lock and immediately re-create it
-        os.remove(p_os)
-        open(p_os, "w").close()  # fresh mtime -> live lock
-
-    monkeypatch.setattr(writer, "_STEAL_STAT_HOOK", faster_stealer_wins)
-    assert writer._try_steal(fs, jpath, p, writer._LOCK_LEASE_MS) is False
-    # A's live lock survived (restored from the tombstone)
-    assert os.path.exists(p_os)
-    assert not [f for f in os.listdir(lock_dir) if ".steal." in f]
+    # zero timeout: a lock still held after the kill would raise at once
+    monkeypatch.setattr(writer, "_LOCK_TIMEOUT_S", 0.0)
+    upsert_candles(
+        spark, make_m1(spark, ["BTC-USD"], "2024-01-01", "2024-01-01",
+                       seed=13), root)
+    assert read_range(spark, root, symbol="BTC-USD").count() == 1440
+    assert _dataset_lock_free(root)
 
 
-def test_steal_race_exactly_one_acquirer(spark, tmp_path):
-    """Two waiters polling a forced-stale lock: exactly one acquires it (the
-    rename tombstone arbitrates the steal; createNewFile arbitrates the
-    re-create); the other times out against the winner's fresh lock."""
+def test_held_lock_times_out_without_writing(spark, tmp_path, monkeypatch):
+    """A writer that cannot take the dataset lock within _LOCK_TIMEOUT_S
+    raises PartitionLockTimeout and writes nothing. The holder is another
+    open() of the lock file in this same process, so threads of one
+    process exclude each other too."""
+    import fcntl
+    import time
+
+    from backtest_crew_datalake_spark.sources import writer
+
+    monkeypatch.setattr(writer, "_LOCK_TIMEOUT_S", 1.0)
+    root = str(tmp_path / "lake")
+    os.makedirs(os.path.join(root, ".locks"))
+    bars = make_m1(spark, ["BTC-USD"], "2024-01-01", "2024-01-01", seed=17)
+    with open(os.path.join(root, ".locks", "data.lock"), "w") as held:
+        fcntl.flock(held, fcntl.LOCK_EX)
+        t0 = time.monotonic()
+        with pytest.raises(writer.PartitionLockTimeout):
+            upsert_candles(spark, bars, root)
+        assert time.monotonic() - t0 >= 1.0
+    assert not os.path.exists(os.path.join(root, "data"))
+    assert _dataset_lock_free(root)
+
+
+def test_concurrent_write_levels_same_partition_no_lost_rows(
+        spark, tmp_path):
+    """Six write_levels calls, each adding a different session day to ONE
+    (symbol, year) partition, serialize on the levels dataset lock; an
+    unserialized read-modify-write lets a later overwrite drop an earlier
+    writer's row."""
     import threading
-    import time as _t
 
-    from backtest_crew_datalake_spark.sources import writer
+    from backtest_crew_datalake_spark.operators.levels import build_or_levels
+    from backtest_crew_datalake_spark.sources.writer import write_levels
 
-    lock_dir = str(tmp_path / "locks")
-    fs, jpath = _lock_fs(spark, lock_dir)
-    p_os = os.path.join(lock_dir, "part.lock")
-    p = jpath(p_os)
-    open(p_os, "w").close()
-    stale = _t.time() - 3600
-    os.utime(p_os, (stale, stale))
+    root = str(tmp_path / "lake")
+    m1 = make_m1(spark, ["BTC-USD"], "2024-01-01", "2024-01-07", seed=19)
+    lv = spark.createDataFrame(
+        build_or_levels(m1, or_window="00:00-01:00", tz="UTC",
+                        by=["symbol"]).toPandas())
+    days = [f"2024-01-0{d}" for d in range(1, 8)]
+    day = F.col("session_date").cast("string")
+    # seed the partition so every writer takes the read-modify-write path
+    write_levels(spark, lv.where(day == days[0]), root)
 
-    results = []
+    errs = []
 
-    def waiter():
+    def run(d):
         try:
-            writer._acquire(fs, jpath, p, _t.monotonic() + 2.0,
-                            writer._LOCK_LEASE_MS)
-            results.append("acquired")
-        except writer.PartitionLockTimeout:
-            results.append("timeout")
+            write_levels(spark, lv.where(day == d), root)
+        except Exception as e:
+            errs.append(e)
 
-    threads = [threading.Thread(target=waiter) for _ in range(2)]
+    threads = [threading.Thread(target=run, args=(d,)) for d in days[1:]]
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
-    assert sorted(results) == ["acquired", "timeout"], results
-    assert os.path.exists(p_os)  # the winner's lock is in place
-
-
-def test_heartbeat_prevents_midwrite_steal(spark, tmp_path):
-    """A write that outlives the lock lease must NOT lose its lock: the
-    holder's heartbeat renews the mtime every lease/3, so a competitor
-    waiting with steal-on-stale times out instead of stealing mid-write."""
-    import threading
-    import time as _t
-
-    from backtest_crew_datalake_spark.sources.writer import (
-        PartitionLockTimeout, _partition_locks)
-
-    lock_dir = str(tmp_path / "locks")
-    release = threading.Event()
-    held = threading.Event()
-    errs = []
-
-    def holder():
-        try:
-            with _partition_locks(spark, lock_dir, ["p1"], timeout_s=5.0,
-                                  lease_ms=600):
-                held.set()
-                release.wait(10.0)  # hold well past the 600 ms lease
-        except Exception as e:
-            errs.append(e)
-
-    t = threading.Thread(target=holder)
-    t.start()
-    assert held.wait(10.0)
-    _t.sleep(0.9)  # lock is now older than the lease unless renewed
-    try:
-        with pytest.raises(PartitionLockTimeout):
-            with _partition_locks(spark, lock_dir, ["p1"], timeout_s=1.2,
-                                  lease_ms=600):
-                pass
-    finally:
-        release.set()
-        t.join(10.0)
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
     assert not errs, errs
-    # after release, the lock is gone and a new writer proceeds immediately
-    with _partition_locks(spark, lock_dir, ["p1"], timeout_s=2.0,
-                          lease_ms=600):
-        pass
-
-def test_exclusive_drains_preexisting_shared_locks(spark, tmp_path):
-    """An exclusive writer must take the dataset sentinel, then WAIT until
-    pre-existing shared (per-partition) locks drain before proceeding."""
-    import threading
-    import time as _t
-
-    from backtest_crew_datalake_spark.sources.writer import _partition_locks
-
-    lock_dir = str(tmp_path / "locks")
-    shared_held = threading.Event()
-    release_shared = threading.Event()
-    excl_entered = threading.Event()
-    errs = []
-
-    def shared():
-        try:
-            with _partition_locks(spark, lock_dir, ["p1"], timeout_s=10.0):
-                shared_held.set()
-                release_shared.wait(10.0)
-        except Exception as e:
-            errs.append(e)
-
-    def exclusive():
-        try:
-            with _partition_locks(spark, lock_dir, [], timeout_s=10.0,
-                                  exclusive=True):
-                excl_entered.set()
-        except Exception as e:
-            errs.append(e)
-
-    ts = threading.Thread(target=shared)
-    ts.start()
-    assert shared_held.wait(10.0)
-    te = threading.Thread(target=exclusive)
-    te.start()
-    _t.sleep(0.5)
-    # exclusive holds the sentinel but must NOT have entered yet
-    assert os.path.exists(os.path.join(lock_dir, "__dataset.lock"))
-    assert not excl_entered.is_set()
-    release_shared.set()
-    assert excl_entered.wait(10.0)  # drains as soon as the shared lock goes
-    ts.join(10.0)
-    te.join(10.0)
-    assert not errs, errs
-    assert [f for f in os.listdir(lock_dir) if f.endswith(".lock")] == []
-
-
-def test_shared_blocks_on_sentinel_until_released(spark, tmp_path):
-    """A shared writer arriving while the dataset sentinel exists must wait;
-    it proceeds as soon as the sentinel is removed."""
-    import threading
-    import time as _t
-
-    from backtest_crew_datalake_spark.sources.writer import _partition_locks
-
-    lock_dir = str(tmp_path / "locks")
-    os.makedirs(lock_dir, exist_ok=True)
-    sentinel = os.path.join(lock_dir, "__dataset.lock")
-    open(sentinel, "w").close()  # fresh sentinel: an exclusive writer "runs"
-
-    entered = threading.Event()
-    errs = []
-
-    def shared():
-        try:
-            with _partition_locks(spark, lock_dir, ["p1"], timeout_s=10.0):
-                entered.set()
-        except Exception as e:
-            errs.append(e)
-
-    t = threading.Thread(target=shared)
-    t.start()
-    _t.sleep(0.5)
-    assert not entered.is_set()  # blocked on the live sentinel
-    os.remove(sentinel)          # exclusive writer "finishes"
-    assert entered.wait(10.0)
-    t.join(10.0)
-    assert not errs, errs
+    got = spark.read.parquet(f"{root}/levels")
+    assert sorted(str(r[0]) for r in got.select("session_date").collect()) \
+        == days
+    assert _dataset_lock_free(root, "levels")
 
 
 def test_compact_partitions_zorder_clusters(spark, tmp_path):

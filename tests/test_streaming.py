@@ -197,54 +197,6 @@ def test_streaming_resample_counts(spark, tmp_path):
     assert abs(row["volume"] - exp[2]) < 1e-9
 
 
-def test_tws_sessionize_across_batches(spark, tmp_path):
-    """transformWithStateInPandas variant: same cross-batch session merge
-    contract as applyInPandasWithState (state carries the open session)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="TWS state-server protocol needs protobuf (absent here)",
-    )
-    src = str(tmp_path / "twssrc")
-    out_dir = str(tmp_path / "twsout")
-    ckpt = str(tmp_path / "twsckpt")
-
-    from backtest_crew_datalake_spark.streaming.stateful import tws_sessionize
-
-    def write_batch(rows, mode):
-        pdf = spark.createDataFrame(rows, "user_id long, ts timestamp")
-        pdf.coalesce(1).write.mode(mode).parquet(src)
-
-    b = pd.Timestamp("2024-01-01 00:00:00")
-    m = pd.Timedelta(minutes=1)
-    write_batch([(1, b.to_pydatetime()), (1, (b + 5 * m).to_pydatetime())],
-                "overwrite")
-
-    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-    sessions = tws_sessionize(stream, timeout_seconds=1800)
-
-    def run_once():
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("parquet").option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-
-    run_once()
-    assert spark.read.parquet(out_dir).count() == 0  # nothing closed yet
-
-    write_batch([(1, (b + 10 * m).to_pydatetime()),
-                 (1, (b + 60 * m).to_pydatetime())], "append")
-    run_once()
-    out = spark.read.parquet(out_dir).toPandas()
-    assert len(out) == 1
-    s = out.iloc[0]
-    assert s.user_id == 1 and s.n_events == 3
-    assert pd.Timestamp(s.session_start) == b
-    assert pd.Timestamp(s.session_end) == b + 10 * m
-
-
 def test_streaming_or_levels_matches_batch(spark, tmp_path):
     """streaming_or_levels emits day 1 when day 2's first bar arrives, and
     the emitted row matches build_or_levels on the same data exactly
@@ -1071,7 +1023,6 @@ def test_streaming_upsert_rejects_constraint_violations(spark, tmp_path):
     file lands — the table stays at its pre-batch snapshot and a clean
     batch afterwards still goes through (data quality as a gate, not a
     silent filter)."""
-    import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from backtest_crew_datalake_spark.sources.acid import (
